@@ -192,9 +192,10 @@ def write_rows_parquet(path: str, pa_schema, columns: dict) -> None:
         pq.write_table(table, sink)
 
 
-def _pa_dataset(path: str):
+def _pa_dataset(path: str, schema=None, partitioning=None):
     """pyarrow dataset resolved through pyarrow.fs — the same local /
-    hdfs:// / s3:// portability as the write path."""
+    hdfs:// / s3:// portability as the write path.  The file listing is
+    taken here, once: the dataset is a snapshot of the directory."""
     import pyarrow.dataset as pads
     from pyarrow import fs as pafs
 
@@ -202,7 +203,10 @@ def _pa_dataset(path: str):
         filesystem, base = pafs.FileSystem.from_uri(path)
     except Exception:
         filesystem, base = pafs.LocalFileSystem(), path
-    return pads.dataset(base, format="parquet", filesystem=filesystem)
+    return pads.dataset(
+        base, format="parquet", filesystem=filesystem, schema=schema,
+        partitioning=partitioning,
+    )
 
 
 def read_parquet_table(path: str, columns=None):

@@ -137,6 +137,11 @@ def segmented_delta_decode(
     prefix (standard reduceat trick)."""
     c = np.asarray(counts, dtype=np.int64)
     gaps = varint_decode(buf, total if total is not None else int(c.sum()))
+    return _segment_cumsum(gaps, c)
+
+
+def _segment_cumsum(gaps: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Cumulative sum restarted at every segment of `c` values."""
     if gaps.size == 0:
         return gaps
     starts = np.zeros(len(c), dtype=np.int64)
@@ -148,3 +153,31 @@ def segmented_delta_decode(
     base[1:] = run[starts[1:] - 1]
     seg_len = np.diff(np.append(starts, gaps.size))
     return run - np.repeat(base, seg_len)
+
+
+def varint_decode_blocks(blobs, counts) -> np.ndarray:
+    """varint_decode of many blocks in one vectorized pass over their
+    concatenated bytes (a posting batch's per-block numpy overhead
+    otherwise dominates its decode).  Returns the values concatenated
+    in block order; raises ValueError unless every block holds exactly
+    its count of whole values."""
+    c = np.asarray(counts, dtype=np.int64)
+    buf = b"".join(blobs)
+    b = np.frombuffer(buf, dtype=np.uint8)
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(c))
+    ends = np.cumsum(lens)
+    is_last = (b & 0x80) == 0
+    seen = np.concatenate(([0], np.cumsum(is_last)))[ends]
+    if not (
+        np.array_equal(seen, np.cumsum(c)) and is_last[ends[lens > 0] - 1].all()
+    ):
+        raise ValueError("posting blocks do not hold their counts of varints")
+    return varint_decode(buf, int(c.sum()))
+
+
+def delta_decode_blocks(blobs, counts) -> np.ndarray:
+    """delta_decode of many blocks at once: each block's first value is
+    absolute, so the gaps cumsum restarts at every block.  uint64
+    wrap-around makes the running sum exact whatever its size."""
+    c = np.asarray(counts, dtype=np.int64)
+    return _segment_cumsum(varint_decode_blocks(blobs, c), c)

@@ -24,6 +24,28 @@ rarest query term: the k-th best single-term contribution is a valid
 lower bound on the k-th best total.
 
 Determinism: ties broken (score desc, doc_id asc) — SURVEY.md §2.G1.
+
+Two paths serve `search()`:
+
+  * driver-local — a plain query (mode blockmax / exhaustive / and; no
+    explain, include, exclude or after cursor; k ≤ LOCAL_MAX_K) whose
+    Σdf is at most `BM25Index.local_max_df` never touches Spark.  pyarrow
+    reads the query terms' term_bucket partitions filtered on term, the
+    same `_decode_and_score` closure decodes and scores, numpy sums per
+    doc in a fixed order (term, then doc), applies the match-count and
+    tombstone masks and cuts top-k, and the k winners' url/title come
+    from an isin() read of the doc_id-sorted docs table.  The rows go
+    back as an Arrow-backed local relation: 0 Spark jobs per query.
+    The pass is exhaustive, so it is exact with no θ-seed.
+  * Spark — the plan above, for everything else and for large queries;
+    it stays the oracle the local path is tested against (tests set
+    local_max_df = 0 to force it).
+
+Snapshot semantics are those of opening the index: the Spark frames pin
+their file listings at open (InMemoryFileIndex), and the local path's
+pyarrow datasets and tombstone ids are listed and read at open too, so
+a merge or delete committed afterwards is seen by neither path until
+the index is reopened.
 """
 
 from __future__ import annotations
@@ -35,22 +57,31 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
 )
 
-from search_engine_spark.index.builder import IndexPaths
+from search_engine_spark import schemas
+from search_engine_spark.index.builder import IndexPaths, _pa_dataset
 from search_engine_spark.index.codec import (
     delta_decode,
+    delta_decode_blocks,
     segmented_delta_decode,
     varint_decode,
+    varint_decode_blocks,
 )
 from search_engine_spark.index.scoring import (
     idf_py,
@@ -98,6 +129,102 @@ _TERM_CONTRIB_SCHEMA = StructType(
     ]
 )
 
+# search() result shapes: scored ids, + url/title, or + explain map
+_SCORED_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("score", DoubleType())]
+)
+_HIT_SCHEMA = StructType(
+    _SCORED_SCHEMA.fields
+    + [StructField("url", StringType()), StructField("title", StringType())]
+)
+_EXPLAIN_SCHEMA = StructType(
+    _SCORED_SCHEMA.fields
+    + [StructField("term_scores", MapType(StringType(), DoubleType()))]
+)
+
+# ES index.max_result_window: deeper top-k lists take the Spark plan
+LOCAL_MAX_K = 10_000
+# Default Σdf gate of the driver-local path (BM25Index.local_max_df).
+# The local path decodes on one driver core: measured ~35 ms fixed plus
+# ~0.25 µs per posting (~4M postings/s; 20k-page index, 4-vCPU host).
+# The Spark plan's floor is its 5-8 job schedulings, 0.55-0.65 s per
+# query at local[4] on the same index, whatever the Σdf.  2M postings is
+# the Σdf the driver decodes within ~0.5 s, below that floor.
+LOCAL_MAX_DF = 2_000_000
+
+
+def _local_relation(
+    spark: SparkSession, schema: StructType, columns: Optional[dict] = None
+) -> DataFrame:
+    """Driver-side columns (None = no rows) as an Arrow-backed local
+    relation.  createDataFrame(pyarrow.Table) becomes a LocalRelation
+    the driver answers itself: collecting it runs no Spark job, where
+    createDataFrame(list) — or an empty pandas frame, which falls back
+    to it — parallelizes a Python RDD and runs one (~0.3 s)."""
+    pa_schema = to_arrow_schema(schema)
+    table = (
+        pa_schema.empty_table()
+        if columns is None
+        else pa.table(columns, schema=pa_schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_schema(struct: StructType, names: Tuple[str, ...]) -> pa.Schema:
+    """Arrow schema of some columns of a declared table schema, nullable
+    as Spark writes parquet columns."""
+    return to_arrow_schema(
+        StructType([StructField(n, struct[n].dataType) for n in names])
+    )
+
+
+class _ArrowTables:
+    """The index tables the driver-local path reads, as pyarrow datasets
+    whose file listings are taken once, at open, plus the tombstoned ids
+    read at the same point."""
+
+    POSTING_COLS = ("term", "first_doc_id", "count", "doc_ids", "tfs", "doclens")
+
+    def __init__(self, paths: IndexPaths, tombstoned: bool):
+        from search_engine_spark.index.merge import tombstones_path
+
+        bucket = _arrow_schema(schemas.POSTINGS, ("term_bucket",))
+        self.postings = _pa_dataset(
+            paths.postings,
+            schema=_arrow_schema(
+                schemas.POSTINGS, self.POSTING_COLS + ("term_bucket",)
+            ),
+            partitioning=pads.partitioning(bucket, flavor="hive"),
+        )
+        self.term_stats = _pa_dataset(
+            paths.term_stats,
+            schema=_arrow_schema(
+                schemas.TERM_STATS, tuple(schemas.TERM_STATS.names)
+            ),
+        )
+        self.docs = _pa_dataset(
+            paths.docs,
+            schema=_arrow_schema(schemas.DOCS, ("doc_id", "url", "title")),
+        )
+        self.tomb_ids = np.empty(0, dtype=np.int64)
+        if tombstoned:
+            tomb = _pa_dataset(
+                tombstones_path(paths),
+                schema=_arrow_schema(schemas.TOMBSTONES, ("doc_id",)),
+            )
+            self.tomb_ids = np.unique(
+                tomb.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
+            )
+
+    @classmethod
+    def open(cls, paths: IndexPaths, tombstoned: bool) -> Optional["_ArrowTables"]:
+        """None when pyarrow cannot resolve or list the index root (a
+        filesystem it has no driver for): queries then take Spark."""
+        try:
+            return cls(paths, tombstoned)
+        except (OSError, pa.ArrowException):
+            return None
+
 
 def _lit_map(d: Dict[str, float]):
     """string->double literal map column (term-keyed constants in
@@ -131,48 +258,41 @@ def _decode_and_score(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids_out: List[np.ndarray] = []
-            contrib_out: List[np.ndarray] = []
-            terms_out: List[np.ndarray] = []
-            for term, n, ids_b, tfs_b, dls_b in zip(
-                pdf["term"], pdf["count"], pdf["doc_ids"], pdf["tfs"], pdf["doclens"]
-            ):
-                idf = idf_by_term.get(term)
-                if idf is None:
+            pdf = pdf[pdf["term"].isin(list(idf_by_term))]
+            if pdf.empty:
+                continue
+            # the whole batch decodes in one vectorized pass per column
+            n = pdf["count"].to_numpy(dtype=np.int64)
+            terms = pdf["term"].to_numpy(dtype=object)
+            ids = delta_decode_blocks(pdf["doc_ids"].tolist(), n).astype(np.int64)
+            tfs = varint_decode_blocks(pdf["tfs"].tolist(), n)
+            dls = (
+                None
+                if formula == "tfidf"
+                else varint_decode_blocks(pdf["doclens"].tolist(), n)
+            )
+            row_block = np.repeat(np.arange(len(n)), n)
+            if cand is not None:
+                m = np.isin(ids, cand)
+                if not m.any():
                     continue
-                gaps = varint_decode(bytes(ids_b), int(n))
-                ids = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-                tfs = varint_decode(bytes(tfs_b), int(n))
-                dls = (
-                    None
-                    if formula == "tfidf"
-                    else varint_decode(bytes(dls_b), int(n))
+                ids, tfs, row_block = ids[m], tfs[m], row_block[m]
+                if dls is not None:
+                    dls = dls[m]
+            idf = np.array([idf_by_term[t] for t in terms])[row_block]
+            if formula == "tfidf":
+                contrib = (1.0 + np.log10(tfs.astype(np.float64))) * idf
+            else:
+                avg = (
+                    np.array([avgdl[t] for t in terms])[row_block]
+                    if isinstance(avgdl, dict)
+                    else avgdl
                 )
-                if cand is not None:
-                    m = np.isin(ids, cand, assume_unique=True)
-                    if not m.any():
-                        continue
-                    ids, tfs = ids[m], tfs[m]
-                    if dls is not None:
-                        dls = dls[m]
-                ids_out.append(ids)
-                if formula == "tfidf":
-                    contrib_out.append(
-                        (1.0 + np.log10(tfs.astype(np.float64))) * idf
-                    )
-                else:
-                    avg = avgdl[term] if isinstance(avgdl, dict) else avgdl
-                    contrib_out.append(score_np(tfs, dls, idf, avg))
-                if emit_term:
-                    terms_out.append(np.full(len(ids), term, dtype=object))
-            if ids_out:
-                cols = {
-                    "doc_id": np.concatenate(ids_out),
-                    "contrib": np.concatenate(contrib_out),
-                }
-                if emit_term:
-                    cols = {"term": np.concatenate(terms_out), **cols}
-                yield pd.DataFrame(cols)
+                contrib = score_np(tfs, dls, idf, avg)
+            cols = {"doc_id": ids, "contrib": contrib}
+            if emit_term:
+                cols = {"term": terms[row_block], **cols}
+            yield pd.DataFrame(cols)
 
     return run
 
@@ -628,8 +748,6 @@ class BM25Index:
 
         self.spark = spark
         self.paths = IndexPaths(index_dir)
-        from search_engine_spark import schemas
-
         corpus = spark.read.parquet(self.paths.corpus_stats).collect()[0]
         self.n_docs = int(corpus["n_docs"])
         self.avgdl = float(corpus["avgdl"])
@@ -649,6 +767,13 @@ class BM25Index:
         # then recomputed from (max_tf, min_dl) at query time.
         self.tombstones = read_tombstones(spark, self.paths)
         self.merged = self.tombstones is not None or is_merged(spark, self.paths)
+        # Driver-local path (module docstring): the same files through
+        # pyarrow, listed now as the frames above were.  None when
+        # pyarrow cannot resolve the root; the term-stat lookup and
+        # every query then go through Spark.
+        self._arrow = _ArrowTables.open(self.paths, self.tombstones is not None)
+        # Σdf gate of the local path; tests set 0 to force Spark.
+        self.local_max_df = LOCAL_MAX_DF
         # θ-seeding pays one extra (tiny) Spark job to prune the main
         # scan; below this df the rare term's whole posting list is a
         # handful of blocks and the scan it would prune is already
@@ -715,11 +840,21 @@ class BM25Index:
         # empty-match call never leaves a stale previous plan behind
         self._last_vwh_plan = None
 
-    # -- term stat lookup (tiny collect; stats rows only for query terms) --
+    # -- term stat lookup (stats rows only for query terms) --
     def _query_stats(self, terms: List[str]) -> Dict[str, Tuple[int, float, int, int, int]]:
+        """(df, max_score, term_bucket, max_tf, min_dl) per indexed
+        term.  A memo miss reads term_stats on the driver through
+        pyarrow — the table is range-sorted by term, so row-group
+        min/max stats prune to the query terms — and falls back to a
+        Spark collect only when pyarrow cannot resolve the index."""
         missing = [t for t in terms if t not in self._stats_memo]
         if missing:
-            rows = self.term_stats.filter(F.col("term").isin(missing)).collect()
+            if self._arrow is not None:
+                rows = self._arrow.term_stats.to_table(
+                    filter=pc.field("term").isin(missing)
+                ).to_pylist()
+            else:
+                rows = self.term_stats.filter(F.col("term").isin(missing)).collect()
             found = {
                 r["term"]: (
                     int(r["df"]),
@@ -751,20 +886,16 @@ class BM25Index:
         return self._max_df_memo
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "doc_id long, score double, url string, title string"
-        )
+        return _local_relation(self.spark, _HIT_SCHEMA)
 
     def _empty_scored(
         self, join_docs: bool, explain: bool = False
     ) -> DataFrame:
         if explain:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, term_scores map<string,double>"
-            )
+            return _local_relation(self.spark, _EXPLAIN_SCHEMA)
         if join_docs:
             return self._empty()
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return _local_relation(self.spark, _SCORED_SCHEMA)
 
     def _drop_tombstones(self, df: DataFrame) -> DataFrame:
         """Deleted-docs mask (Lucene-style): tombstoned ids never
@@ -857,6 +988,10 @@ class BM25Index:
         seeded from global-best contributions exceeds every post-cursor
         score and would prune the whole page), so the pass is
         exhaustive-exact; see search_after().
+
+        Plain queries whose Σdf is at most local_max_df are answered on
+        the driver with no Spark job (module docstring); the result is
+        the same top-k, as a local relation.
         """
         if k <= 0 or (include_ids is not None and not len(include_ids)):
             return self._empty_scored(join_docs, explain)
@@ -870,6 +1005,18 @@ class BM25Index:
         terms = [t for t in terms if t in stats]
         if not terms:
             return self._empty_scored(join_docs, explain)
+        if (
+            self._arrow is not None
+            and mode in ("blockmax", "exhaustive", "and")
+            and not explain
+            and include is None
+            and include_ids is None
+            and exclude is None
+            and after is None
+            and k <= LOCAL_MAX_K
+            and sum(stats[t][0] for t in terms) <= self.local_max_df
+        ):
+            return self._local_search(terms, stats, k, mode, join_docs, min_should_match)
 
         if mode == "tfidf":
             max_df = self._max_df() if tfidf_idf == "max" else None
@@ -1031,6 +1178,69 @@ class BM25Index:
             return topk
         return self._join_docs(topk)
 
+    def _local_search(
+        self,
+        terms: List[str],
+        stats: Dict[str, Tuple[int, Optional[float], int, int, int]],
+        k: int,
+        mode: str,
+        join_docs: bool,
+        min_should_match: int,
+    ) -> DataFrame:
+        """search() on the driver (module docstring): exhaustive BM25
+        over the query terms' postings, same decode and scoring as the
+        Spark plan, top-k by (score desc, doc_id asc)."""
+        a = self._arrow
+        idf_by_term = {t: idf_py(self.n_docs, stats[t][0]) for t in terms}
+        blocks = a.postings.to_table(
+            columns=list(_ArrowTables.POSTING_COLS),
+            filter=pc.field("term_bucket").isin(sorted({stats[t][2] for t in terms}))
+            & pc.field("term").isin(terms),
+        ).sort_by([("term", "ascending"), ("first_doc_id", "ascending")])
+        # one input batch -> at most one decoded frame
+        decoded = next(
+            _decode_and_score(idf_by_term, self.avgdl)(iter([blocks.to_pandas()])),
+            None,
+        )
+        if decoded is None:
+            return self._empty_scored(join_docs)
+        ids, contrib = decoded["doc_id"].to_numpy(), decoded["contrib"].to_numpy()
+        # per-doc sum in a fixed order: blocks are sorted by term, and a
+        # stable sort by doc keeps that order within each doc
+        order = np.argsort(ids, kind="stable")
+        ids, contrib = ids[order], contrib[order]
+        starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        doc_ids = ids[starts]
+        scores = np.add.reduceat(contrib, starts)
+        # each (doc, term) decodes to one row, so rows per doc = terms
+        # matched (see search())
+        matched = np.diff(np.r_[starts, len(ids)])
+        need = len(terms) if mode == "and" else max(min_should_match, 1)
+        keep = (matched >= need) & ~np.isin(doc_ids, a.tomb_ids)
+        doc_ids, scores = doc_ids[keep], scores[keep]
+        if len(scores) > k:
+            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+            tail = scores >= kth  # every doc that can rank, ties kept
+            doc_ids, scores = doc_ids[tail], scores[tail]
+        top = np.lexsort((doc_ids, -scores))[:k]
+        cols = {"doc_id": doc_ids[top], "score": scores[top]}
+        if not join_docs:
+            return _local_relation(self.spark, _SCORED_SCHEMA, cols)
+        hits = a.docs.to_table(filter=pc.field("doc_id").isin(cols["doc_id"]))
+        pos = pc.index_in(
+            pa.array(cols["doc_id"]), value_set=hits.column("doc_id").combine_chunks()
+        )
+        found = pos.is_valid()
+        hits = hits.take(pos.filter(found))
+        found = found.to_numpy(zero_copy_only=False)
+        cols = {
+            "doc_id": cols["doc_id"][found],
+            "score": cols["score"][found],
+            "url": hits.column("url"),
+            "title": hits.column("title"),
+        }
+        return _local_relation(self.spark, _HIT_SCHEMA, cols)
+
     def _join_docs(
         self, topk: DataFrame, extra_cols: Tuple[str, ...] = ()
     ) -> DataFrame:
@@ -1054,13 +1264,13 @@ class BM25Index:
                         c, F.lit(None).cast(dict(self.docs.dtypes)[c])
                     )
                 return empty
-            winners = self.spark.createDataFrame(
-                [(int(r["doc_id"]), float(r["score"])) for r in rows],
-                "doc_id long, score double",
+            ids = [int(r["doc_id"]) for r in rows]
+            winners = _local_relation(
+                self.spark,
+                _SCORED_SCHEMA,
+                {"doc_id": ids, "score": [float(r["score"]) for r in rows]},
             )
-            docs = docs.filter(
-                F.col("doc_id").isin([int(r["doc_id"]) for r in rows])
-            )
+            docs = docs.filter(F.col("doc_id").isin(ids))
         cols = ["doc_id", "url", "title", *extra_cols]
         return (
             F.broadcast(winners)
@@ -2464,14 +2674,16 @@ class BM25Index:
             # initial (pre-adaptive) one — only post-execution does
             # executedPlan() reflect what actually ran (ADVICE r4).
             # _jdf is a classic-session private accessor; a Spark
-            # Connect session has none, so degrade the diagnostic to
-            # None instead of failing the query.
+            # Connect session has none (AttributeError), so degrade the
+            # diagnostic to None instead of failing the query.  A py4j
+            # error reading the plan degrades it the same way; anything
+            # else is a real failure and propagates.
             rows = agg_df.collect()
             try:
                 self._last_vwh_plan = (
                     agg_df._jdf.queryExecution().executedPlan().toString()
                 )
-            except Exception:
+            except (AttributeError, Py4JError):
                 self._last_vwh_plan = None
             return self.spark.createDataFrame(rows, schema)
         finally:

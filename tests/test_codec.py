@@ -7,10 +7,12 @@ from hypothesis import strategies as st
 
 from search_engine_spark.index.codec import (
     delta_decode,
+    delta_decode_blocks,
     delta_encode,
     segmented_delta_decode,
     segmented_delta_encode,
     varint_decode,
+    varint_decode_blocks,
     varint_encode,
 )
 
@@ -76,3 +78,35 @@ def test_count_mismatch_raises():
     enc = varint_encode(np.array([1, 2, 3], dtype=np.uint64))
     with pytest.raises(ValueError):
         varint_decode(enc, 5)
+
+
+@given(
+    st.lists(
+        st.sets(st.integers(min_value=0, max_value=2**62), min_size=1, max_size=40),
+        max_size=30,
+    )
+)
+@settings(max_examples=100, deadline=None)
+def test_block_batch_decode_equals_per_block(blocks):
+    """Decoding a batch of blocks at once equals decoding each block."""
+    ids = [np.array(sorted(b), dtype=np.uint64) for b in blocks]
+    counts = [len(a) for a in ids]
+    id_blobs = [delta_encode(a) for a in ids]
+    val_blobs = [varint_encode(a) for a in ids]
+    want = np.concatenate(ids) if ids else np.empty(0, dtype=np.uint64)
+    assert np.array_equal(delta_decode_blocks(id_blobs, counts), want)
+    assert np.array_equal(varint_decode_blocks(val_blobs, counts), want)
+
+
+def test_block_batch_decode_checks_each_block():
+    """A byte moved across a block boundary keeps the batch total but
+    breaks both blocks' counts: refused, as the per-block decode does."""
+    a = varint_encode(np.array([1, 300, 5], dtype=np.uint64))
+    b = varint_encode(np.array([7, 70000], dtype=np.uint64))
+    assert np.array_equal(
+        varint_decode_blocks([a, b], [3, 2]), [1, 300, 5, 7, 70000]
+    )
+    with pytest.raises(ValueError):
+        varint_decode_blocks([a[:-2], a[-2:] + b], [3, 2])
+    with pytest.raises(ValueError):
+        varint_decode_blocks([a + b[:1], b[1:]], [3, 2])

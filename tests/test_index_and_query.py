@@ -94,6 +94,7 @@ class TestRankIdentity:
     def test_blockmax_equals_exhaustive(self, spark, corpus, query):
         paths, _ = corpus
         idx = BM25Index(spark, paths.root, seed_min_df=0)
+        idx.local_max_df = 0  # θ-pruning runs on the Spark path only
         a = [
             (r["doc_id"], round(r["score"], 9))
             for r in idx.search(query, k=10, mode="blockmax", join_docs=False)
@@ -203,6 +204,7 @@ class TestRankIdentity:
         by the rarest term's df, not the Zipf-head term's."""
         paths, oracle = corpus
         idx = BM25Index(spark, paths.root)
+        idx.local_max_df = 0  # the candidate gate is the Spark path's
         idx.phrase_cand_max_df = 10**9
         idx.phrase_cand_ratio = 0.0
         idx.phrase_cand_min_pruned = 0
@@ -434,6 +436,7 @@ class TestDocsLookup:
         the docs scan; results must be identical to the lazy join."""
         paths, _ = corpus
         idx = BM25Index(spark, paths.root)
+        idx.local_max_df = 0  # both join-backs are the Spark path's
         for q in ["python programming tutorial", "quick brown fox"]:
             idx.lookup_min_docs = 10**9
             lazy = [

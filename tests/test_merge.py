@@ -10,6 +10,8 @@ indexer's overwrite-by-id path (indexer.py:236-247, 249-271, 273-293):
   equals a from-scratch build over the surviving documents
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +24,7 @@ from search_engine_spark.index.merge import (
 )
 from search_engine_spark.query.bm25 import BM25Index
 from search_engine_spark.synth import synth_pages
+from search_engine_spark.text.tokenizer import tokenize_py
 
 N_ALL = 400
 N_BASE = 300  # rows 0..299
@@ -105,6 +108,7 @@ class TestMerge:
         merged-index bounds come from (max_tf, min_dl) + current stats."""
         root, _, _ = merged
         idx = BM25Index(spark, root, seed_min_df=0)
+        idx.local_max_df = 0  # θ-pruning runs on the Spark path only
         assert idx.merged
         for q in QUERIES:
             bm = [
@@ -118,21 +122,23 @@ class TestMerge:
             assert bm == ex, q
 
 
-class TestCompact:
-    @pytest.fixture(scope="class")
-    def compacted(self, spark, merged, tmp_path_factory):
-        root, _, all_pages = merged
-        out = str(tmp_path_factory.mktemp("compact_idx"))
-        fresh = str(tmp_path_factory.mktemp("fresh_idx"))
-        compact_index(
-            spark, root, out, num_buckets=16, block_size=32, num_partitions=8
-        )
-        build_index(
-            spark, all_pages, fresh, num_buckets=16, block_size=32,
-            num_partitions=8, resume=False,
-        )
-        return out, fresh
+@pytest.fixture(scope="module")
+def compacted(spark, merged, tmp_path_factory):
+    """(compacted merged index, fresh build over the same live pages)"""
+    root, _, all_pages = merged
+    out = str(tmp_path_factory.mktemp("compact_idx"))
+    fresh = str(tmp_path_factory.mktemp("fresh_idx"))
+    compact_index(
+        spark, root, out, num_buckets=16, block_size=32, num_partitions=8
+    )
+    build_index(
+        spark, all_pages, fresh, num_buckets=16, block_size=32,
+        num_partitions=8, resume=False,
+    )
+    return out, fresh
 
+
+class TestCompact:
     def test_compacted_is_fresh_equivalent(self, spark, compacted):
         """Rank/score identity vs a from-scratch build over the same
         logical corpus, compared by url (doc ids differ by design)."""
@@ -163,6 +169,7 @@ class TestCompact:
     def test_compacted_blockmax_exact(self, spark, compacted):
         out, _ = compacted
         idx = BM25Index(spark, out, seed_min_df=0)
+        idx.local_max_df = 0  # θ-pruning runs on the Spark path only
         for q in QUERIES:
             bm = [
                 (r["doc_id"], round(r["score"], 9))
@@ -272,3 +279,118 @@ class TestMergeSafety:
         idx = BM25Index(spark, root)
         assert idx.n_docs == 30
         assert idx.search("python", k=5).count() > 0
+
+
+def _jobs_run(spark, fn):
+    """fn()'s result and the Spark jobs it launched, counted under a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_same_topk(got, want):
+    """Ids identical and scores within 1e-9; docs whose scores tie
+    within 1e-9 may swap (summation order moves the last bits)."""
+    assert len(got) == len(want)
+    tol = 1e-9
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) <= tol
+    # compare id sets per run of tied scores; the run the cut ends in
+    # may hold different members of the tie
+    i = 0
+    while i < len(want):
+        j = i + 1
+        while j < len(want) and abs(want[j]["score"] - want[i]["score"]) <= tol:
+            j += 1
+        if j < len(want):
+            assert {r["doc_id"] for r in got[i:j]} == {
+                r["doc_id"] for r in want[i:j]
+            }
+        i = j
+    if want and "url" in want[0].__fields__:
+        urls = {r["doc_id"]: r["url"] for r in want}
+        for r in got:
+            if r["doc_id"] in urls:
+                assert r["url"] == urls[r["doc_id"]]
+
+
+class TestLocalPath:
+    """The driver-local serving path against the Spark plan on one
+    BM25Index: the gate at its default answers without a Spark job, at
+    0 it forces the Spark plan (the oracle)."""
+
+    # (mode, min_should_match, join_docs)
+    CASES = [
+        ("blockmax", 1, True),
+        ("exhaustive", 1, False),
+        ("and", 1, True),
+        ("blockmax", 2, False),
+        ("exhaustive", 2, True),
+    ]
+
+    @pytest.fixture(scope="class", params=["fresh", "merged", "compacted"])
+    def index(self, request, spark, merged, compacted):
+        root = {
+            "fresh": compacted[1],
+            "merged": merged[0],
+            "compacted": compacted[0],
+        }[request.param]
+        return BM25Index(spark, root)
+
+    def _both(self, spark, idx, q, **kw):
+        default = idx.local_max_df
+        local, jobs = _jobs_run(spark, lambda: idx.search(q, **kw).collect())
+        idx.local_max_df = 0
+        try:
+            oracle = idx.search(q, **kw).collect()
+        finally:
+            idx.local_max_df = default
+        return local, jobs, oracle
+
+    def test_rank_identical_to_spark_plan(self, spark, index):
+        for q in QUERIES[:3]:
+            for mode, msm, join_docs in self.CASES:
+                local, jobs, oracle = self._both(
+                    spark, index, q, k=10, mode=mode,
+                    min_should_match=msm, join_docs=join_docs,
+                )
+                assert jobs == 0, (q, mode, msm)
+                assert oracle, (q, mode, msm)
+                _assert_same_topk(local, oracle)
+
+    def test_k_above_match_count(self, spark, index):
+        local, jobs, oracle = self._both(
+            spark, index, QUERIES[1], k=N_ALL + 100, mode="exhaustive"
+        )
+        assert jobs == 0
+        assert 0 < len(oracle) < N_ALL + 100
+        _assert_same_topk(local, oracle)
+
+    def test_unknown_terms_empty(self, spark, index):
+        local, jobs, oracle = self._both(spark, index, "zzqx qqzv", k=10)
+        assert jobs == 0
+        assert local == oracle == []
+
+    def test_sum_df_over_gate_takes_spark(self, spark, index):
+        q = QUERIES[0]
+        stats = index._query_stats(sorted(set(tokenize_py(q))))
+        sum_df = sum(s[0] for s in stats.values())
+        local, jobs, oracle = self._both(spark, index, q, k=10)
+        assert jobs == 0
+        default = index.local_max_df
+        index.local_max_df = sum_df - 1
+        try:
+            over, over_jobs = _jobs_run(
+                spark, lambda: index.search(q, k=10).collect()
+            )
+        finally:
+            index.local_max_df = default
+        assert over_jobs > 0
+        _assert_same_topk(local, over)
+        _assert_same_topk(over, oracle)

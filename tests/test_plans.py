@@ -34,7 +34,29 @@ def idx(spark, tmp_path_factory):
         spark, synth_pages(spark, 200, num_partitions=4), root,
         num_buckets=8, block_size=16, num_partitions=4, resume=False,
     )
-    return BM25Index(spark, root)
+    idx = BM25Index(spark, root)
+    # the plans pinned here are the Spark path's; with the default gate
+    # these small queries are answered driver-locally, with no plan
+    idx.local_max_df = 0
+    return idx
+
+
+def test_plain_search_runs_no_spark_job(spark, idx):
+    """Jobs per plain query cannot silently regress: the driver-local
+    path answers search() + collect() with 0 Spark jobs."""
+    served = BM25Index(spark, idx.paths.root)
+    sc = spark.sparkContext
+    for join_docs in (True, False):
+        group = f"plain-search-{join_docs}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = served.search(
+                "python programming", k=10, join_docs=join_docs
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_posting_scan_prunes_term_bucket_partitions(idx):
