@@ -145,11 +145,17 @@ _EXPLAIN_SCHEMA = StructType(
 # ES index.max_result_window: deeper top-k lists take the Spark plan
 LOCAL_MAX_K = 10_000
 # Default Σdf gate of the driver-local path (BM25Index.local_max_df).
-# The local path decodes on one driver core: measured ~35 ms fixed plus
-# ~0.25 µs per posting (~4M postings/s; 20k-page index, 4-vCPU host).
-# The Spark plan's floor is its 5-8 job schedulings, 0.55-0.65 s per
-# query at local[4] on the same index, whatever the Σdf.  2M postings is
-# the Σdf the driver decodes within ~0.5 s, below that floor.
+# The local path decodes on one driver core, the Spark plan on all of
+# them after 5-8 job schedulings.  Measured with top-10 queries over
+# the commonest terms of a 200k-page synth index at local[4] on a
+# 4-vCPU host (warm medians; driver peak RSS in brackets):
+#   Σdf 0.5M: local 0.33 s, Spark 1.7 s
+#   Σdf 1.0M: local 0.38-0.42 s, Spark 2.2-2.4 s
+#   Σdf 2.0M: local 0.69-0.74 s (390 MB), Spark 2.6 s
+#   Σdf 4.0M: local 1.6 s (580 MB), Spark 3.0 s
+# The gap narrows with Σdf and more executor cores narrow it further, so
+# the gate stops at 2M, the largest Σdf at which the local path was
+# still several times faster.
 LOCAL_MAX_DF = 2_000_000
 
 
@@ -215,15 +221,6 @@ class _ArrowTables:
             self.tomb_ids = np.unique(
                 tomb.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
             )
-
-    @classmethod
-    def open(cls, paths: IndexPaths, tombstoned: bool) -> Optional["_ArrowTables"]:
-        """None when pyarrow cannot resolve or list the index root (a
-        filesystem it has no driver for): queries then take Spark."""
-        try:
-            return cls(paths, tombstoned)
-        except (OSError, pa.ArrowException):
-            return None
 
 
 def _lit_map(d: Dict[str, float]):
@@ -767,11 +764,10 @@ class BM25Index:
         # then recomputed from (max_tf, min_dl) at query time.
         self.tombstones = read_tombstones(spark, self.paths)
         self.merged = self.tombstones is not None or is_merged(spark, self.paths)
-        # Driver-local path (module docstring): the same files through
-        # pyarrow, listed now as the frames above were.  None when
-        # pyarrow cannot resolve the root; the term-stat lookup and
-        # every query then go through Spark.
-        self._arrow = _ArrowTables.open(self.paths, self.tombstones is not None)
+        # Driver-local path and term-stat lookup (module docstring): the
+        # same files through pyarrow.fs, which the builder writes the
+        # manifest with, listed now as the frames above were.
+        self._arrow = _ArrowTables(self.paths, self.tombstones is not None)
         # Σdf gate of the local path; tests set 0 to force Spark.
         self.local_max_df = LOCAL_MAX_DF
         # θ-seeding pays one extra (tiny) Spark job to prune the main
@@ -845,16 +841,12 @@ class BM25Index:
         """(df, max_score, term_bucket, max_tf, min_dl) per indexed
         term.  A memo miss reads term_stats on the driver through
         pyarrow — the table is range-sorted by term, so row-group
-        min/max stats prune to the query terms — and falls back to a
-        Spark collect only when pyarrow cannot resolve the index."""
+        min/max stats prune to the query terms; no Spark job."""
         missing = [t for t in terms if t not in self._stats_memo]
         if missing:
-            if self._arrow is not None:
-                rows = self._arrow.term_stats.to_table(
-                    filter=pc.field("term").isin(missing)
-                ).to_pylist()
-            else:
-                rows = self.term_stats.filter(F.col("term").isin(missing)).collect()
+            rows = self._arrow.term_stats.to_table(
+                filter=pc.field("term").isin(missing)
+            ).to_pylist()
             found = {
                 r["term"]: (
                     int(r["df"]),
@@ -1006,8 +998,7 @@ class BM25Index:
         if not terms:
             return self._empty_scored(join_docs, explain)
         if (
-            self._arrow is not None
-            and mode in ("blockmax", "exhaustive", "and")
+            mode in ("blockmax", "exhaustive", "and")
             and not explain
             and include is None
             and include_ids is None

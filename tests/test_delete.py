@@ -14,7 +14,7 @@ from search_engine_spark.index.merge import (
     delete_pages,
     live_docs,
 )
-from search_engine_spark.query.bm25 import BM25Index
+from search_engine_spark.query.bm25 import LOCAL_MAX_DF, BM25Index
 from search_engine_spark.query.oracle import BM25Oracle
 from search_engine_spark.synth import synth_pages
 from search_engine_spark.text.tokenizer import tokenize_py
@@ -60,14 +60,17 @@ class TestDeleteByUrl:
         n = delete_pages(spark, root, urls=[top_url])
         assert n == 1
         idx = BM25Index(spark, root)  # fresh handle sees tombstones
-        after = _topk(idx, QUERY)
-        assert all(d != top_doc for d, _ in after)
         # scores of survivors unchanged (stats stay stale, Lucene-style):
         # the remainder of the old top-k is the head of the new one
         want = [x for x in before if x[0] != top_doc][:5]
-        assert [d for d, _ in after[:5]] == [d for d, _ in want]
-        for (_, gs), (_, ws) in zip(after[:5], want):
-            assert abs(gs - ws) < 1e-9
+        # the driver-local path at the default gate, then the Spark plan
+        for gate in (LOCAL_MAX_DF, 0):
+            idx.local_max_df = gate
+            after = _topk(idx, QUERY)
+            assert all(d != top_doc for d, _ in after), gate
+            assert [d for d, _ in after[:5]] == [d for d, _ in want], gate
+            for (_, gs), (_, ws) in zip(after[:5], want):
+                assert abs(gs - ws) < 1e-9, gate
 
     def test_idempotent_and_counts(self, spark, built):
         root, docs, _ = built

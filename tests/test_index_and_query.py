@@ -7,12 +7,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.index.builder import IndexPaths, build_index
-from search_engine_spark.query.bm25 import BM25Index
+from search_engine_spark.query.bm25 import LOCAL_MAX_DF, BM25Index
 from search_engine_spark.query.oracle import BM25Oracle, TFIDFOracle
 from search_engine_spark.synth import synth_pages
 from search_engine_spark.text.tokenizer import tokenize_py
 
 N_PAGES = 400
+
+# driver-local path at the default gate, then the Spark plan (gate 0)
+GATES = (LOCAL_MAX_DF, 0)
 
 QUERIES = [
     "python programming tutorial",
@@ -79,16 +82,18 @@ class TestRankIdentity:
     def test_matches_oracle(self, spark, corpus, query):
         paths, oracle = corpus
         idx = BM25Index(spark, paths.root)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in idx.search(query, k=10, mode="exhaustive", join_docs=False)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        ]
         want = oracle.topk(query, k=10)
-        assert [d for d, _ in got] == [d for d, _ in want], query
-        for (_, gs), (_, ws) in zip(got, want):
-            assert abs(gs - ws) < 1e-9, query
+        for gate in GATES:
+            idx.local_max_df = gate
+            got = [
+                (r["doc_id"], r["score"])
+                for r in idx.search(query, k=10, mode="exhaustive", join_docs=False)
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .collect()
+            ]
+            assert [d for d, _ in got] == [d for d, _ in want], (query, gate)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) < 1e-9, (query, gate)
 
     @pytest.mark.parametrize("query", QUERIES)
     def test_blockmax_equals_exhaustive(self, spark, corpus, query):
@@ -116,16 +121,18 @@ class TestRankIdentity:
     def test_and_mode_matches_oracle(self, spark, corpus, query):
         paths, oracle = corpus
         idx = BM25Index(spark, paths.root)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in idx.search(query, k=10, mode="and", join_docs=False)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        ]
         want = oracle.topk_and(query, k=10)
-        assert [d for d, _ in got] == [d for d, _ in want], query
-        for (_, gs), (_, ws) in zip(got, want):
-            assert abs(gs - ws) < 1e-9, query
+        for gate in GATES:
+            idx.local_max_df = gate
+            got = [
+                (r["doc_id"], r["score"])
+                for r in idx.search(query, k=10, mode="and", join_docs=False)
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .collect()
+            ]
+            assert [d for d, _ in got] == [d for d, _ in want], (query, gate)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) < 1e-9, (query, gate)
 
     @pytest.mark.parametrize(
         "query",

@@ -22,13 +22,15 @@ from search_engine_spark.index.merge import (
     merge_pages,
     read_tombstones,
 )
-from search_engine_spark.query.bm25 import BM25Index
+from search_engine_spark.query.bm25 import LOCAL_MAX_DF, BM25Index
 from search_engine_spark.synth import synth_pages
 from search_engine_spark.text.tokenizer import tokenize_py
 
 N_ALL = 400
 N_BASE = 300  # rows 0..299
 BATCH_LO = 200  # rows 200..399 re-crawl 200..299, add 300..399
+# driver-local path at the default gate, then the Spark plan (gate 0)
+GATES = (LOCAL_MAX_DF, 0)
 
 QUERIES = [
     "python programming tutorial",
@@ -91,9 +93,11 @@ class TestMerge:
         tomb_ids = {
             r["doc_id"] for r in read_tombstones(spark, idx.paths).collect()
         }
-        for q in QUERIES:
-            got = idx.search(q, k=50, mode="exhaustive").collect()
-            assert not ({r["doc_id"] for r in got} & tomb_ids), q
+        for gate in GATES:
+            idx.local_max_df = gate
+            for q in QUERIES:
+                got = idx.search(q, k=50, mode="exhaustive").collect()
+                assert not ({r["doc_id"] for r in got} & tomb_ids), (q, gate)
 
     def test_recrawled_url_resolves_to_new_doc(self, spark, merged):
         root, _, _ = merged
@@ -147,7 +151,8 @@ class TestCompact:
         idx_f = BM25Index(spark, fresh)
         assert idx_c.n_docs == idx_f.n_docs == N_ALL
         assert abs(idx_c.avgdl - idx_f.avgdl) < 1e-9
-        for q in QUERIES:
+        for gate, q in ((g, q) for g in GATES for q in QUERIES):
+            idx_c.local_max_df = idx_f.local_max_df = gate
             # k = corpus size -> full result set; canonicalize by
             # (-score, url) so equal-score ties compare stably
             a = sorted(
@@ -158,7 +163,7 @@ class TestCompact:
                 (round(r["score"], 8), r["url"])
                 for r in idx_f.search(q, k=N_ALL, mode="exhaustive").collect()
             )
-            assert a == b, q
+            assert a == b, (q, gate)
 
     def test_compacted_not_merged_flagged(self, spark, compacted):
         out, _ = compacted

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.index.builder import build_index
 from search_engine_spark.index.codec import varint_decode
-from search_engine_spark.query.bm25 import BM25Index
+from search_engine_spark.query.bm25 import LOCAL_MAX_DF, BM25Index
 from search_engine_spark.synth import synth_pages
 
 N_PAGES = 240
@@ -78,16 +78,20 @@ def test_query_correct_over_salted_runs(spark, salted):
     idx = BM25Index(spark, salted, seed_min_df=0)
     stats = {r["term"]: r["df"] for r in idx.term_stats.collect()}
     hot = max(stats, key=stats.get)
-    got = idx.search(hot, k=N_PAGES, mode="exhaustive", join_docs=False)
-    assert got.count() == stats[hot]
-    assert got.select("doc_id").distinct().count() == stats[hot]
-    bm = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in idx.search(hot, k=20, mode="blockmax", join_docs=False)
-        .orderBy(F.desc("score"), F.asc("doc_id")).collect()
-    ]
-    ex = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in got.orderBy(F.desc("score"), F.asc("doc_id")).limit(20).collect()
-    ]
-    assert bm == ex
+    # the driver-local path at the default gate, then the Spark plan
+    # (gate 0), where blockmax is the θ-pruned scan
+    for gate in (LOCAL_MAX_DF, 0):
+        idx.local_max_df = gate
+        got = idx.search(hot, k=N_PAGES, mode="exhaustive", join_docs=False)
+        assert got.count() == stats[hot], gate
+        assert got.select("doc_id").distinct().count() == stats[hot], gate
+        bm = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in idx.search(hot, k=20, mode="blockmax", join_docs=False)
+            .orderBy(F.desc("score"), F.asc("doc_id")).collect()
+        ]
+        ex = [
+            (r["doc_id"], round(r["score"], 9))
+            for r in got.orderBy(F.desc("score"), F.asc("doc_id")).limit(20).collect()
+        ]
+        assert bm == ex, gate
